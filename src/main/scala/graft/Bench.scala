@@ -52,9 +52,10 @@ object Bench {
     // q_s* tail — in-bench accumulated state, not machine load. Three
     // leak classes build up across 380+ queries: (a) locally-
     // checkpointed pins (Materialize.pin) whose blocks wait on the
-    // async ContextCleaner, (b) memory-sink temp tables the streaming
-    // gates register (each holds its changelog rows), (c) cached
-    // relations. gc() alone only ENQUEUES weak refs; unpersist/drop
+    // async ContextCleaner, (b) memory-sink temp tables that outlive
+    // their query (StreamScope.runGate drops its own sink view, but the
+    // lazily-read gate_rtiff_out of q_stream_raster_tiff stays
+    // registered, holding its rows), (c) cached relations. gc() alone only ENQUEUES weak refs; unpersist/drop
     // frees eagerly.
     def reap(): Unit = {
       spark.sharedState.cacheManager.clearCache()
