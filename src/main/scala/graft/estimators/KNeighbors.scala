@@ -11,13 +11,14 @@ import graft.sources.Tables.fanOut
   * `predict_proba` `estimator.py:233`; `kneighbors` `estimator.py:387`).
   *
   * Spark realization: the training matrix is SMALL by construction (the
-  * tabular fit side), collected once into primitive row-major arrays and
-  * shipped inside a Catalyst expression ([[KnnScanExpr]]) — each input
-  * row's top-k scan runs directly on InternalRow data inside the
-  * projection. Zero shuffle, zero crossJoin, no per-row Row boxing;
-  * input partitions are processed independently, so throughput scales
-  * linearly with executors at 100 TB. (A crossJoin+window formulation
-  * would materialize n×m rows through a shuffle; ruled out at scale.)
+  * tabular fit side), collected once into primitive feature-major
+  * arrays ([[KnnState]]) and shipped inside a Catalyst expression
+  * ([[KnnScanExpr]]) — each input row's top-k scan runs directly on
+  * InternalRow data inside the projection. Zero shuffle, zero
+  * crossJoin, no per-row Row boxing; input partitions are processed
+  * independently, so throughput scales linearly with executors at
+  * 100 TB. (A crossJoin+window formulation would materialize n×m rows
+  * through a shuffle; ruled out at scale.)
   *
   * Determinism: neighbors are ordered by (squaredDistance, trainId)
   * ascending — distance ties break on the training-row id, matching the
@@ -26,75 +27,123 @@ import graft.sources.Tables.fanOut
   * doubles are bit-identical to a left-associated SQL expression.
   */
 private[estimators] final class KnnState(
-    val ids: Array[Long],      // m training-row ids (tie-break + kneighbors output)
-    val x: Array[Double],      // m*d row-major features
-    val y: Array[Double],      // m*t row-major regression targets (empty for cls)
-    val yCls: Array[Int],      // m class indices (empty for regression)
+    val ids: Array[Long],              // m training-row ids (tie-break + kneighbors output)
+    val cols: Array[Array[Double]],    // d feature columns of m values each (feature-major)
+    val y: Array[Double],              // m*t row-major regression targets (empty for cls)
+    val yCls: Array[Int],              // m class indices (empty for regression)
     val m: Int,
     val d: Int
 ) extends Serializable
 
+private[estimators] object KnnState {
+
+  /** The fitted state of `rows` — the sorted fit rows, each d features
+    * followed by t targets — with training ids 0..m-1 in row order.
+    * Features are transposed once here to the feature-major `cols` the
+    * kernel's distance pass streams through.
+    */
+  def apply(rows: Array[Array[Double]], d: Int, t: Int,
+            yCls: Array[Int] = Array.empty): KnnState = {
+    val m = rows.length
+    new KnnState(
+      ids = Array.tabulate(m)(_.toLong),
+      cols = Array.tabulate(d)(j => Array.tabulate(m)(i => rows(i)(j))),
+      y = rows.flatMap(_.slice(d, d + t)),
+      yCls = yCls,
+      m = m,
+      d = d)
+  }
+}
+
 private[estimators] object KnnKernel {
+
+  /** Distance pass: `acc(i)` = the nan_euclidean squared distance from
+    * `q` to training row i (sklearn KNNImputer distance): missing (NaN)
+    * query dims are skipped and the sum scales by d/n_obs. The loop runs
+    * feature by feature over all m rows — a branch-free body over two
+    * contiguous arrays, which the JIT vectorizes — and each row still
+    * sums its diff² terms in declaration order. The first observed
+    * feature assigns instead of adding (0.0 + x == x for x ≥ 0), so every
+    * row's sum is bit-identical to a row-at-a-time left fold.
+    * Fully-observed rows get factor 1.0, an identity for every double.
+    * Fully-missing rows come out NaN (0 · d/0); callers mask them.
+    * `acc` is caller-owned scratch of at least m slots.
+    */
+  def distances(q: Array[Double], st: KnnState, acc: Array[Double]): Unit = {
+    val m = st.m; val d = st.d
+    var nobs = 0
+    var j = 0
+    while (j < d) {
+      val qj = q(j)
+      if (qj == qj) { // not NaN
+        val c = st.cols(j)
+        var i = 0
+        if (nobs == 0) while (i < m) { val diff = qj - c(i); acc(i) = diff * diff; i += 1 }
+        else while (i < m) { val diff = qj - c(i); acc(i) += diff * diff; i += 1 }
+        nobs += 1
+      }
+      j += 1
+    }
+    if (nobs == 0) java.util.Arrays.fill(acc, 0, m, 0.0)
+    val factor = d.toDouble / nobs
+    if (factor != 1.0) {
+      var i = 0
+      while (i < m) { acc(i) *= factor; i += 1 }
+    }
+  }
 
   /** Fill `outIdx` with the k training-row indices nearest to `q`,
     * ordered by (dist², id) ascending; `outD` gets the squared distances.
-    * Returns the neighbor count (min(k, m)).
+    * Returns the neighbor count (min(k, m)). Two passes: [[distances]]
+    * into the m-slot scratch `acc`, then a select over it. Once the
+    * buffer is full, a row whose d² exceeds the current n-th distance
+    * cannot enter, so it is skipped before its id is read; every other
+    * row takes the (d², id) insertion.
     */
   def topK(
       q: Array[Double],
       st: KnnState,
       k: Int,
       outIdx: Array[Int],
-      outD: Array[Double]
+      outD: Array[Double],
+      acc: Array[Double]
   ): Int = {
-    val m = st.m; val d = st.d
+    val m = st.m
     val n = math.min(k, m)
-    // nan_euclidean (sklearn KNNImputer distance): missing (NaN) query
-    // dims are skipped and the sum scales by d/n_obs. Fully-observed
-    // rows get factor 1.0 and x*1.0 is the identity for every double,
-    // so the classic paths are bit-unchanged. Fully-missing rows are
-    // the caller's responsibility (mask + fill).
-    var nobs = 0
-    var jj = 0
-    while (jj < d) { if (!q(jj).isNaN) nobs += 1; jj += 1 }
-    val factor = d.toDouble / nobs
-    var filled = 0
+    val ids = st.ids
+    distances(q, st, acc)
+    // insertion sort into the not-yet-full buffer
     var i = 0
-    while (i < m) {
-      val base = i * d
-      var d2 = 0.0
-      var j = 0
-      while (j < d) {
-        val qj = q(j)
-        if (qj == qj) { // not NaN
-          val diff = qj - st.x(base + j)
-          d2 += diff * diff
-        }
-        j += 1
+    while (i < n) {
+      val d2 = acc(i); val id = ids(i)
+      var p = i
+      while (p > 0 && (outD(p - 1) > d2 ||
+             (outD(p - 1) == d2 && ids(outIdx(p - 1)) > id))) {
+        outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
       }
-      d2 *= factor
-      val id = st.ids(i)
-      if (filled < n) {
-        // insertion sort into the not-yet-full buffer
-        var p = filled
-        while (p > 0 && (outD(p - 1) > d2 ||
-               (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
-          outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
-        }
-        outD(p) = d2; outIdx(p) = i
-        filled += 1
-      } else {
-        val lastD = outD(n - 1)
-        if (d2 < lastD || (d2 == lastD && id < st.ids(outIdx(n - 1)))) {
-          var p = n - 1
-          while (p > 0 && (outD(p - 1) > d2 ||
-                 (outD(p - 1) == d2 && st.ids(outIdx(p - 1)) > id))) {
-            outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
-          }
-          outD(p) = d2; outIdx(p) = i
-        }
-      }
+      outD(p) = d2; outIdx(p) = i
       i += 1
+    }
+    if (n > 0) {
+      var lastD = outD(n - 1)
+      while (i < m) {
+        val d2 = acc(i)
+        // skips only rows the (d², id) test below rejects anyway:
+        // d² > lastD, or NaN on either side
+        if (d2 <= lastD) {
+          val id = ids(i)
+          if (d2 < lastD || (d2 == lastD && id < ids(outIdx(n - 1)))) {
+            var p = n - 1
+            while (p > 0 && (outD(p - 1) > d2 ||
+                   (outD(p - 1) == d2 && ids(outIdx(p - 1)) > id))) {
+              outD(p) = outD(p - 1); outIdx(p) = outIdx(p - 1); p -= 1
+            }
+            outD(p) = d2; outIdx(p) = i
+            lastD = outD(n - 1)
+          }
+        }
+        i += 1
+      }
     }
     n
   }
@@ -142,14 +191,7 @@ final case class KNeighborsRegressor(
   def fit(train: DataFrame, featureCols: Seq[String], targetCols: Seq[String]): KnnRegressorModel = {
     val ord = if (orderBy.nonEmpty) orderBy else featureCols ++ targetCols
     val sorted = FitUtil.collectSorted(train, ord, featureCols ++ targetCols)
-    val d = featureCols.length; val t = targetCols.length
-    val st = new KnnState(
-      ids = Array.tabulate(sorted.length)(_.toLong),
-      x = sorted.flatMap(_.take(d)),
-      y = sorted.flatMap(_.slice(d, d + t)),
-      yCls = Array.empty,
-      m = sorted.length,
-      d = d)
+    val st = KnnState(sorted, featureCols.length, targetCols.length)
     new KnnRegressorModel(featureCols, targetCols, st, k, weighted)
   }
 }
@@ -270,14 +312,7 @@ final case class RadiusNeighborsRegressor(radius: Double, orderBy: Seq[String] =
   def fit(train: DataFrame, featureCols: Seq[String], targetCols: Seq[String]): RadiusRegressorModel = {
     val ord = if (orderBy.nonEmpty) orderBy else featureCols ++ targetCols
     val sorted = FitUtil.collectSorted(train, ord, featureCols ++ targetCols)
-    val d = featureCols.length; val t = targetCols.length
-    val st = new KnnState(
-      ids = Array.tabulate(sorted.length)(_.toLong),
-      x = sorted.flatMap(_.take(d)),
-      y = sorted.flatMap(_.slice(d, d + t)),
-      yCls = Array.empty,
-      m = sorted.length,
-      d = d)
+    val st = KnnState(sorted, featureCols.length, targetCols.length)
     new RadiusRegressorModel(featureCols, targetCols, st, radius)
   }
 }
@@ -333,7 +368,6 @@ final case class KNeighborsClassifier(k: Int = 5, orderBy: Seq[String] = Nil,
       train, ord, featureCols, labelCol = Some(targetCols.head))
     require(labels.forall(_ != null),
       s"classifier label column '${targetCols.head}' contains NULLs")
-    val d = featureCols.length
     // sklearn's tie rule is "lowest class VALUE": order numerically when
     // every label parses as a number (string sort would put "10" < "2"),
     // lexicographically otherwise
@@ -342,13 +376,7 @@ final case class KNeighborsClassifier(k: Int = 5, orderBy: Seq[String] = Nil,
       if (asNumbers.forall(_._2.isDefined)) asNumbers.sortBy(_._2.get).map(_._1)
       else asNumbers.map(_._1).sorted
     val clsIdx = classes.zipWithIndex.toMap
-    val st = new KnnState(
-      ids = Array.tabulate(feats.length)(_.toLong),
-      x = feats.flatten,
-      y = Array.empty,
-      yCls = labels.map(clsIdx),
-      m = feats.length,
-      d = d)
+    val st = KnnState(feats, featureCols.length, t = 0, yCls = labels.map(clsIdx))
     new KnnClassifierModel(featureCols, classes, st, k, weighted)
   }
 }

@@ -12,6 +12,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * accumulation and (dist, id) tie-breaks stay bit-identical to the
   * oracles).
   *
+  * Per row, the kernel makes two passes over the feature-major
+  * [[KnnState]]: a vectorized distance pass fills an m-slot d² buffer
+  * ([[KnnKernel.distances]]), then a select pass picks the neighbors
+  * ([[KnnKernel.topK]]) or, for [[KnnScanExpr.ModeRadius]], the ball.
+  * The query, d² and top-k buffers are per-thread scratch reused across
+  * rows ([[KnnScratch]]); only the output array is allocated per row.
+  *
   * Input: `array<double>` of features (NoData rows must be routed around
   * the expression by the caller's `when(mask, ...)`). Output:
   * `array<double>` whose layout depends on `mode`:
@@ -21,6 +28,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   *  - [[KnnScanExpr.ModeCounts]]:   classCount neighbor class counts
   *  - [[KnnScanExpr.ModeNN]]:       k neighbor ids then k distances
   *                                  (ids are exact ≤ 2^53 doubles)
+  *  - [[KnnScanExpr.ModeRadius]]:   count within `radius2`, then t target
+  *                                  means (NaN for an empty ball); its
+  *                                  rows are NoData-masked before the
+  *                                  scan, so the query carries no NaN
   *
   * The fitted state ships inside the expression → serialized once into
   * the stage's task binary (the fit side is small by construction).
@@ -50,10 +61,14 @@ case class KnnScanExpr(
       s"${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData) $ref.nullSafeEval($c);")
   }
 
+  @transient private lazy val scratch: ThreadLocal[KnnScratch] =
+    ThreadLocal.withInitial(() => new KnnScratch(st.d, st.m, math.min(k, st.m)))
+
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
+    val sc = scratch.get
+    val q = sc.q; val idx = sc.idx; val d2 = sc.d2
     val d = st.d
-    val q = new Array[Double](d)
     var j = 0
     while (j < d) { q(j) = arr.getDouble(j); j += 1 }
     val t = if (st.m == 0) 0 else st.y.length / st.m
@@ -63,13 +78,12 @@ case class KnnScanExpr(
       // training-id order — identical to the oracle for integer-valued
       // targets (exact) and within round-off for continuous ones.
       val o = new Array[Double](1 + t)
+      val acc = sc.acc
+      KnnKernel.distances(q, st, acc)
       var cnt = 0
       var i = 0
       while (i < st.m) {
-        val base = i * d
-        var dd = 0.0; var jj = 0
-        while (jj < d) { val diff = q(jj) - st.x(base + jj); dd += diff * diff; jj += 1 }
-        if (dd <= radius2) {
+        if (acc(i) <= radius2) {
           cnt += 1
           var ti = 0
           while (ti < t) { o(1 + ti) += st.y(i * t + ti); ti += 1 }
@@ -81,9 +95,7 @@ case class KnnScanExpr(
       while (ti < t) { o(1 + ti) = if (cnt > 0) o(1 + ti) / cnt else Double.NaN; ti += 1 }
       return new GenericArrayData(o)
     }
-    val idx = new Array[Int](math.min(k, st.m))
-    val d2 = new Array[Double](idx.length)
-    val n = KnnKernel.topK(q, st, k, idx, d2)
+    val n = KnnKernel.topK(q, st, k, idx, d2, sc.acc)
     val out = mode match {
       case KnnScanExpr.ModeReg =>
         val o = new Array[Double](t)
@@ -163,4 +175,15 @@ object KnnScanExpr {
   val ModeNN = 3
   val ModeRadius = 4
   val ModeWeightedCounts = 5
+}
+
+/** One thread's reusable kNN scan buffers: the d-slot query, the m-slot
+  * d² accumulator of the distance pass, and the n-slot top-k (index, d²)
+  * buffer.
+  */
+private[estimators] final class KnnScratch(d: Int, m: Int, n: Int) {
+  val q = new Array[Double](d)
+  val acc = new Array[Double](m)
+  val idx = new Array[Int](n)
+  val d2 = new Array[Double](n)
 }

@@ -1043,10 +1043,12 @@ object Similarity {
     // id again. One fused mapPartitions kernel now does assignment AND
     // per-cluster partial (count, sum) accumulation in the same pass:
     // only partitions×kC partial rows ever shuffle. The assignment
-    // arithmetic replays KnnKernel.topK with k=1 exactly (per-feature
-    // left-to-right diff² accumulation, strict-< replacement = ties to
-    // the lowest cluster id; the nan_euclidean factor is d/d = 1.0, a
-    // bit-identity). Centroid means keep the declared quantization
+    // arithmetic replays the kNN kernel with k=1 exactly: each
+    // centroid's d² sums diff² over the features left to right — the
+    // same per-row term order as KnnKernel.distances's feature-major
+    // pass — strict-< replacement = ties to the lowest cluster id (the
+    // (d², id) select), and the nan_euclidean factor is d/d = 1.0, a
+    // bit-identity. Centroid means keep the declared quantization
     // gates (dec6 into round 2, dec4 on output) which absorb partial-
     // aggregation order exactly as they did for the old avg() — the old
     // pipeline stays as the byte-for-byte reference in
@@ -1069,6 +1071,8 @@ object Similarity {
         val cnt = new Array[Long](nc)
         val sums = Array.fill(nc)(new Array[Double](nDims))
         it.foreach { row =>
+          require(!row.isNullAt(0),
+            "qKmeans kernel: embedding must be non-null (the assignment reads every dimension)")
           val v = row.getSeq[Double](0).toArray
           var best = 0; var bestD = Double.PositiveInfinity
           var ci = 0

@@ -1561,6 +1561,8 @@ object TextOps {
     val px =
       fanOut(docs).mapPartitions { it =>
         it.flatMap { row =>
+          require(!row.isNullAt(1),
+            "qLmScore bigram kernel: document text must be non-null (it is split into words)")
           val id = row.getLong(0)
           val w = row.getString(1).split(" ", -1)
           (0 until w.length - 1).iterator
@@ -1736,6 +1738,7 @@ object TextOps {
           }
         }
       }
+      require(counts.nonEmpty, "BPE merge round found no adjacent pairs")
       val ((a, b), n) = counts.toSeq.minBy { case ((a, b), n) => (-n, a, b) }
       st = st.map { case (t, c) =>
         (t.replace("|" + a + "||" + b + "|", "|" + a + b + "|"), c)
@@ -1993,7 +1996,11 @@ object TextOps {
     * vocabulary is BOUNDED to the top-[[nbMaxFeatures]] words
     * (CountVectorizer max_features — OOV words drop from the doc
     * representation, so the weight frame is ≤ K·|classes| at any
-    * corpus size). Scoring pivots the weight frame to a per-word
+    * corpus size). The class domain (the documents' distinct sources)
+    * is capped at 64: the fit collects the per-class priors to the
+    * driver and scoring fans out one column pair per class, so a wider
+    * source domain fails with a loud `require` naming the bound.
+    * Scoring pivots the weight frame to a per-word
     * class-delta vector so ALL classes score inside one groupBy(doc_id)
     * aggregate — argmax with class-name tie-break happens in a single
     * projection, never materializing a docs×classes frame; publishes
@@ -2330,6 +2337,8 @@ object TextOps {
     val toks = fanOut(documents(s, dir).select(col("doc_id"), col("text")))
       .mapPartitions { it =>
         it.flatMap { row =>
+          require(!row.isNullAt(1),
+            "qLmScore bigram kernel: document text must be non-null (it is split into words)")
           val id = row.getLong(0)
           val w = row.getString(1).split(" ", -1)
           (0 until w.length - 1).iterator.map(i => Row(id, w(i) + "_" + w(i + 1)))
