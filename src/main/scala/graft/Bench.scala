@@ -207,11 +207,18 @@ object Bench {
     // printed in bounded self-contained chunks right before the summary
     // line — whatever stdout tail the driver keeps, the chunks nearest
     // the end parse, so per-query data is recoverable without the file.
+    // Without SPARK_GRAFT_BENCH_OUT the canonical bench_out.json (the
+    // name the per-query PERF report reads) is written beside the stamped
+    // file, so the latest run is always there under the fixed name.
     val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"bench_out.c$cpus.$sfBase.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val outs = if (sys.env.contains("SPARK_GRAFT_BENCH_OUT")) Seq(out)
+      else Seq(out, "bench_out.json")
+    outs.foreach { o =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(o),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
     val chunkSize = 64
     val chunks = results.grouped(chunkSize).toSeq
     chunks.zipWithIndex.foreach { case (chunk, i) =>

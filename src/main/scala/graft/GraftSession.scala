@@ -2,12 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.{GraftLocalFileSystem, GraftLocalFs}
+
 /** Canonical session factory: every entry point (Verify, Bench, tests)
   * builds through here so engine-level settings stay consistent.
   */
 object GraftSession {
   /** Configs the engine requires regardless of entry point. */
   def withGraftConfigs(b: SparkSession.Builder): SparkSession.Builder = b
+    // `file:` through graft.core.LocalFs, for the FileSystem and the
+    // FileContext API: the stock local FS forks chmod per created file
+    // and readlink per rename.
+    .config("spark.hadoop.fs.file.impl", classOf[GraftLocalFileSystem].getName)
+    .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[GraftLocalFs].getName)
     // testdata events.ts is TIMESTAMP(NANOS); Spark reads it as a long
     // (normalized back to micros in graft.sources.Tables.events).
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -13,13 +13,19 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
   *
   * Partition scope. Every stream gate runs its micro-batches under a
   * SMALL stateful shuffle-partition count: the arrival sets are
-  * count-bounded but each micro-batch pays state-store
-  * open/commit/maintenance PER PARTITION — at the session's 32 that
-  * overhead is a multiple of the useful work (q_stream_session measured
-  * 17.3s at 32 partitions vs the gate budget; the state itself is a few
-  * thousand keys). 8 partitions keep the operators genuinely parallel
-  * while the state machinery stays proportional to the state. Results
-  * are partition-count-independent (keyed state semantics); the conf is
+  * count-bounded but each micro-batch pays a state-store commit PER
+  * PARTITION — a `.delta` file, its `.crc` and a rename — at the
+  * session's 32 a multiple of the useful work (q_stream_session
+  * measured 17.3s at 32 partitions; the state itself is a few thousand
+  * keys). Most of that commit cost was the stock Hadoop local FS
+  * forking `chmod` per created file and `readlink` per rename;
+  * [[LocalFs]] removed the forks. On the 1,000-event session benchmark
+  * (traced, 4 cores) the median micro-batch's state commit, summed over
+  * its partitions, fell from 383 ms to 12 ms and its offset/commit-log
+  * write from 45 ms to 3 ms. The file per partition per batch remains,
+  * so 8 partitions still keep the operators genuinely parallel while
+  * the state machinery stays proportional to the state. Results are
+  * partition-count-independent (keyed state semantics); the conf is
   * restored afterwards.
   *
   * Concurrency rule. The scope sets and restores SESSION-global conf, so
